@@ -21,6 +21,17 @@ has two shapes the struct parser cannot express —
 All extraction is JVM-side (no Python UDFs); at 100 TB the variant parse is
 a single scan-stage projection and the explodes are narrow.
 
+The views are SQL-expression projections: every stage is one ``selectExpr``
+or ``where`` over constant SQL strings assembled once at import, so the
+``try_variant_get`` paths, the ``transform``/``aggregate``/
+``transform_values`` lambdas, ``named_struct`` and ``CASE WHEN`` reach the
+JVM as text. Building a view costs a few dozen py4j round trips (one per
+string, plus a few per call). Built as a tree of ``Column`` objects, every
+``F.*`` call, ``.alias`` and Python lambda was its own round trip: 1,361 for
+the nested sync view, over 2,100 for flat over nested and 365 for events, or
+0.2-0.4 s of driver time per daily view job at 300 pings, paid again on
+every run before Spark executes anything.
+
 Output schemas mirror the reference's (``nestedSyncType``
 ``SyncPingConversion.scala:93-116``, ``singleEngineFlatSyncType`` ``:118-157``,
 ``syncEventSchema`` ``SyncEventView.scala:125-149``).
@@ -28,126 +39,202 @@ Output schemas mirror the reference's (``nestedSyncType``
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # --- typed cast targets (DDL strings mirroring the reference's structs) ---
 
-FAILURE_DDL = "struct<name:string>"
-STATUS_DDL = "struct<sync:string,service:string>"
-INCOMING_DDL = (
-    "struct<applied:bigint,failed:bigint,newFailed:bigint,reconciled:bigint>"
-)
 OUTGOING_DDL = "struct<sent:bigint,failed:bigint>"
 DEVICE_DDL = "array<struct<id:string,version:string,os:string>>"
 NAMED_COUNT_DDL = "array<struct<name:string,count:bigint>>"
 STEP_DDL = (
     "array<struct<name:string,took:bigint,counts:array<struct<name:string,count:bigint>>>>"
 )
-VALIDATION_DDL = (
-    "struct<version:bigint,checked:bigint,took:bigint,"
-    "problems:array<struct<name:string,count:bigint>>>"
-)
 
 
-def _vget(v: Column, path: str, typ: str) -> Column:
-    return F.try_variant_get(v, path, typ)
+# --- SQL text builders (run once, at import) ---
 
 
-def _failure_reason(v: Column, path: str) -> Column:
+def _get(src: str, path: str, typ: str) -> str:
+    return f"try_variant_get({src}, '{path}', '{typ}')"
+
+
+def _get0(src: str, path: str) -> str:
+    """Optional numeric: absent → 0 (SyncPingConversion.scala:222-238)."""
+    return f"coalesce({_get(src, path, 'bigint')}, 0)"
+
+
+def _present(src: str, path: str) -> str:
+    return f"{_get(src, path, 'variant')} IS NOT NULL"
+
+
+def _failure_reason(src: str, path: str) -> str:
     """F16 failure-reason normalization (SyncPingConversion.scala:174-191):
     struct {name, value} where value is the object's non-name detail field,
     stringified. The reference takes "the first non-name field"; our spec
     coalesces the known detail keys (value, code, error, message, from) —
     deterministic where the reference was map-order-dependent."""
-    name = _vget(v, f"{path}.name", "string")
-    value = F.coalesce(
-        *[_vget(v, f"{path}.{k}", "string") for k in ("value", "code", "error", "message", "from")]
+    value = ", ".join(
+        _get(src, f"{path}.{k}", "string")
+        for k in ("value", "code", "error", "message", "from")
     )
-    return F.when(
-        _vget(v, path, "variant").isNotNull(),
-        F.struct(name.alias("name"), value.alias("value")),
+    name = _get(src, f"{path}.name", "string")
+    return (
+        f"CASE WHEN {_present(src, path)} THEN "
+        f"named_struct('name', {name}, 'value', coalesce({value})) END"
     )
+
+
+# Shared app/os prefix of both sync schemas. The os block appears at the top
+# level on Android pings and under payload on desktop (FIXTURES.md F-2);
+# payload position wins, mirroring the reference.
+_APP_OS = [
+    f"{_get('v', f'$.application.{key}', 'string')} AS {name}"
+    for key, name in (
+        ("buildId", "app_build_id"),
+        ("displayVersion", "app_display_version"),
+        ("name", "app_name"),
+        ("version", "app_version"),
+        ("channel", "app_channel"),
+    )
+] + [
+    f"coalesce({_get('v', f'$.payload.os.{key}', 'string')}, "
+    f"{_get('v', f'$.os.{key}', 'string')}) AS {name}"
+    for key, name in (("name", "os"), ("version", "os_version"), ("locale", "os_locale"))
+]
+
+# One engine variant ``e`` → the nested engineType struct
+# (SyncPingConversion.scala:75-84). Optional numerics default 0; outgoing
+# tolerates object-instead-of-array (:270-272), and each outgoing entry's
+# sent/failed default 0.
+_OUTGOING = (
+    f"transform(coalesce({_get('e', '$.outgoing', f'array<{OUTGOING_DDL}>')}, "
+    f"CASE WHEN {_get('e', '$.outgoing', OUTGOING_DDL)} IS NOT NULL "
+    f"THEN array({_get('e', '$.outgoing', OUTGOING_DDL)}) END), "
+    "o -> named_struct('sent', coalesce(o.sent, 0), 'failed', coalesce(o.failed, 0)))"
+)
+_INCOMING = (
+    f"CASE WHEN {_present('e', '$.incoming')} THEN named_struct("
+    f"'applied', {_get0('e', '$.incoming.applied')}, "
+    f"'failed', {_get0('e', '$.incoming.failed')}, "
+    f"'new_failed', {_get0('e', '$.incoming.newFailed')}, "
+    f"'reconciled', {_get0('e', '$.incoming.reconciled')}) END"
+)
+_VALIDATION = (
+    f"CASE WHEN {_present('e', '$.validation')} THEN named_struct("
+    f"'version', {_get0('e', '$.validation.version')}, "
+    f"'checked', {_get0('e', '$.validation.checked')}, "
+    f"'took', {_get0('e', '$.validation.took')}, "
+    f"'problems', {_get('e', '$.validation.problems', NAMED_COUNT_DDL)}, "
+    f"'failure_reason', {_failure_reason('e', '$.validation.failureReason')}) END"
+)
+_ENGINE = (
+    "named_struct("
+    f"'name', {_get('e', '$.name', 'string')}, "
+    f"'took', {_get0('e', '$.took')}, "
+    f"'status', {_get('e', '$.status', 'string')}, "
+    f"'failure_reason', {_failure_reason('e', '$.failureReason')}, "
+    f"'incoming', {_INCOMING}, "
+    f"'outgoing', {_OUTGOING}, "
+    f"'steps', {_get('e', '$.steps', STEP_DDL)}, "
+    f"'validation', {_VALIDATION})"
+)
+
+# X3 stage 1: one row per sync ``s``. Old-style pings (sync fields directly
+# under payload, no ``syncs`` array) become a one-element array.
+_SYNCS = (
+    f"coalesce({_get('v', '$.payload.syncs', 'array<variant>')}, "
+    f"CASE WHEN {_get('v', '$.payload.when', 'bigint')} IS NOT NULL "
+    f"THEN array({_get('v', '$.payload', 'variant')}) END)"
+)
+_NESTED_EXPLODE = _APP_OS + [
+    f"{_get('v', '$.payload.uid', 'string')} AS uid",
+    f"{_get('v', '$.payload.deviceID', 'string')} AS device_id",
+    f"{_get('v', '$.payload.why', 'string')} AS payload_why",
+    f"explode({_SYNCS}) AS s",
+]
+# X3 stage 2: the nestedSyncType row of each sync
+_NESTED = [
+    "app_build_id",
+    "app_display_version",
+    "app_name",
+    "app_version",
+    "app_channel",
+    "os",
+    "os_version",
+    "os_locale",
+    "uid",
+    "device_id",
+    f"{_get('s', '$.when', 'bigint')} AS `when`",
+    f"{_get0('s', '$.took')} AS took",
+    f"{_failure_reason('s', '$.failureReason')} AS failure_reason",
+    f"CASE WHEN {_present('s', '$.status')} THEN named_struct("
+    f"'sync', {_get('s', '$.status.sync', 'string')}, "
+    f"'service', {_get('s', '$.status.service', 'string')}) END AS status",
+    f"coalesce({_get('s', '$.why', 'string')}, payload_why) AS why",
+    f"transform({_get('s', '$.engines', 'array<variant>')}, e -> {_ENGINE}) AS engines",
+    f"{_get('s', '$.devices', DEVICE_DDL)} AS devices",
+]
+# P9 required-field rejection (uid: SyncPingConversion.scala:468-497;
+# when: :546): drop, don't null-fill.
+_ACCEPTED = "uid IS NOT NULL AND `when` IS NOT NULL"
+
+# X4: one row per engine ``e`` of each sync, outgoing rolled up (F13)
+_SYNC_KEYS = [
+    "uuid() AS sync_id",
+    "date_format(timestamp_millis(`when`), 'yyyyMMdd') AS sync_day",
+]
+
+
+def _outgoing_total(field: str) -> str:
+    return (
+        f"coalesce(aggregate(coalesce(e.outgoing, array()), CAST(0 AS BIGINT), "
+        f"(acc, o) -> acc + coalesce(o.{field}, 0)), 0)"
+    )
+
+
+_FLAT_ENGINE = [
+    "e.name AS engine_name",
+    "coalesce(e.took, 0) AS engine_took",
+    "e.status AS engine_status",
+    "e.failure_reason AS engine_failure_reason",
+    "coalesce(e.incoming.applied, 0) AS engine_incoming_applied",
+    "coalesce(e.incoming.failed, 0) AS engine_incoming_failed",
+    "coalesce(e.incoming.new_failed, 0) AS engine_incoming_new_failed",
+    "coalesce(e.incoming.reconciled, 0) AS engine_incoming_reconciled",
+    "coalesce(size(e.outgoing), 0) AS engine_outgoing_batch_count",
+    f"{_outgoing_total('sent')} AS engine_outgoing_batch_total_sent",
+    f"{_outgoing_total('failed')} AS engine_outgoing_batch_total_failed",
+]
+
+# X5: one row per positional event array ``ev``
+_EVENTS_EXPLODE = [
+    f"{_get('v', '$.payload.uid', 'string')} AS uid",
+    f"{_get('v', '$.payload.deviceID', 'string')} AS device_id",
+    f"explode({_get('v', '$.payload.events', 'array<variant>')}) AS ev",
+]
+# event array position i → (column, type); the first four are required
+_EVENT_FIELDS = (
+    ("event_timestamp", "bigint"),
+    ("event_category", "string"),
+    ("event_method", "string"),
+    ("event_object", "string"),
+    ("event_string_value", "string"),
+)
+_EVENT = [
+    "uid",
+    "device_id",
+    *(f"{_get('ev', f'$[{i}]', typ)} AS {name}" for i, (name, typ) in enumerate(_EVENT_FIELDS)),
+    f"transform_values({_get('ev', '$[5]', 'map<string,variant>')}, "
+    f"(k, x) -> coalesce({_get('x', '$', 'string')}, 'null')) AS event_map_values",
+]
+_EVENT_ACCEPTED = " AND ".join(f"{name} IS NOT NULL" for name, _ in _EVENT_FIELDS[:4])
 
 
 def parse_pings(raw: DataFrame, json_col: str = "json") -> DataFrame:
     """JSON strings → one variant column ``v`` (+ passthrough columns)."""
     others = [c for c in raw.columns if c != json_col]
     return raw.select(*others, F.try_parse_json(F.col(json_col)).alias("v"))
-
-
-def _app_os_columns(v: Column) -> list[Column]:
-    """Shared app/os prefix of both sync schemas. The os block appears at
-    the top level on Android pings and under payload on desktop
-    (FIXTURES.md F-2); payload position wins, mirroring the reference."""
-    return [
-        _vget(v, "$.application.buildId", "string").alias("app_build_id"),
-        _vget(v, "$.application.displayVersion", "string").alias("app_display_version"),
-        _vget(v, "$.application.name", "string").alias("app_name"),
-        _vget(v, "$.application.version", "string").alias("app_version"),
-        _vget(v, "$.application.channel", "string").alias("app_channel"),
-        F.coalesce(
-            _vget(v, "$.payload.os.name", "string"), _vget(v, "$.os.name", "string")
-        ).alias("os"),
-        F.coalesce(
-            _vget(v, "$.payload.os.version", "string"),
-            _vget(v, "$.os.version", "string"),
-        ).alias("os_version"),
-        F.coalesce(
-            _vget(v, "$.payload.os.locale", "string"),
-            _vget(v, "$.os.locale", "string"),
-        ).alias("os_locale"),
-    ]
-
-
-def _engine_struct(e: Column) -> Column:
-    """One engine variant → the nested engineType struct
-    (SyncPingConversion.scala:75-84). Optional numerics default 0
-    (:222-238); outgoing tolerates object-instead-of-array (:270-272)."""
-    outgoing = F.coalesce(
-        _vget(e, "$.outgoing", f"array<{OUTGOING_DDL}>"),
-        F.when(
-            _vget(e, "$.outgoing", OUTGOING_DDL).isNotNull(),
-            F.array(_vget(e, "$.outgoing", OUTGOING_DDL)),
-        ),
-    )
-    # normalize outgoing entry defaults (sent/failed -> 0 when absent)
-    outgoing = F.transform(
-        outgoing,
-        lambda o: F.struct(
-            F.coalesce(o["sent"], F.lit(0)).alias("sent"),
-            F.coalesce(o["failed"], F.lit(0)).alias("failed"),
-        ),
-    )
-    incoming = F.when(
-        _vget(e, "$.incoming", "variant").isNotNull(),
-        F.struct(
-            F.coalesce(_vget(e, "$.incoming.applied", "bigint"), F.lit(0)).alias("applied"),
-            F.coalesce(_vget(e, "$.incoming.failed", "bigint"), F.lit(0)).alias("failed"),
-            F.coalesce(_vget(e, "$.incoming.newFailed", "bigint"), F.lit(0)).alias("new_failed"),
-            F.coalesce(_vget(e, "$.incoming.reconciled", "bigint"), F.lit(0)).alias("reconciled"),
-        ),
-    )
-    validation = F.when(
-        _vget(e, "$.validation", "variant").isNotNull(),
-        F.struct(
-            F.coalesce(_vget(e, "$.validation.version", "bigint"), F.lit(0)).alias("version"),
-            F.coalesce(_vget(e, "$.validation.checked", "bigint"), F.lit(0)).alias("checked"),
-            F.coalesce(_vget(e, "$.validation.took", "bigint"), F.lit(0)).alias("took"),
-            _vget(e, "$.validation.problems", NAMED_COUNT_DDL).alias("problems"),
-            _failure_reason(e, "$.validation.failureReason").alias("failure_reason"),
-        ),
-    )
-    return F.struct(
-        _vget(e, "$.name", "string").alias("name"),
-        F.coalesce(_vget(e, "$.took", "bigint"), F.lit(0)).alias("took"),
-        _vget(e, "$.status", "string").alias("status"),
-        _failure_reason(e, "$.failureReason").alias("failure_reason"),
-        incoming.alias("incoming"),
-        outgoing.alias("outgoing"),
-        _vget(e, "$.steps", STEP_DDL).alias("steps"),
-        validation.alias("validation"),
-    )
 
 
 def nested_sync_view(pings: DataFrame) -> DataFrame:
@@ -158,60 +245,13 @@ def nested_sync_view(pings: DataFrame) -> DataFrame:
     are normalized to a one-element array before the explode. Records
     missing required fields (uid, when) are rejected — count them with
     ``nested_sync_view_observed`` (single-pass) or ``ingest_metrics``."""
-    out = _nested_sync_rows(pings)
-    # P9 required-field rejection (uid: SyncPingConversion.scala:468-497;
-    # when: :546): drop, don't null-fill.
-    return out.where(F.col("uid").isNotNull() & F.col("when").isNotNull())
+    return _nested_sync_rows(pings).where(_ACCEPTED)
 
 
 def _nested_sync_rows(pings: DataFrame) -> DataFrame:
     """The nested view before required-field rejection (shared by the plain
     and observed entry points)."""
-    v = F.col("v")
-    syncs = F.coalesce(
-        _vget(v, "$.payload.syncs", "array<variant>"),
-        # old-style single-sync payload: treat payload itself as the sync
-        F.when(
-            _vget(v, "$.payload.when", "bigint").isNotNull(),
-            F.array(_vget(v, "$.payload", "variant")),
-        ),
-    )
-    exploded = pings.select(
-        *_app_os_columns(v),
-        _vget(v, "$.payload.uid", "string").alias("uid"),
-        _vget(v, "$.payload.deviceID", "string").alias("device_id"),
-        _vget(v, "$.payload.why", "string").alias("payload_why"),
-        F.explode(syncs).alias("s"),
-    )
-    s = F.col("s")
-    out = exploded.select(
-        "app_build_id",
-        "app_display_version",
-        "app_name",
-        "app_version",
-        "app_channel",
-        "os",
-        "os_version",
-        "os_locale",
-        "uid",
-        "device_id",
-        _vget(s, "$.when", "bigint").alias("when"),
-        F.coalesce(_vget(s, "$.took", "bigint"), F.lit(0)).alias("took"),
-        _failure_reason(s, "$.failureReason").alias("failure_reason"),
-        F.when(
-            _vget(s, "$.status", "variant").isNotNull(),
-            F.struct(
-                _vget(s, "$.status.sync", "string").alias("sync"),
-                _vget(s, "$.status.service", "string").alias("service"),
-            ),
-        ).alias("status"),
-        F.coalesce(_vget(s, "$.why", "string"), F.col("payload_why")).alias("why"),
-        F.transform(
-            _vget(s, "$.engines", "array<variant>"), _engine_struct
-        ).alias("engines"),
-        _vget(s, "$.devices", DEVICE_DDL).alias("devices"),
-    )
-    return out
+    return pings.selectExpr(*_NESTED_EXPLODE).selectExpr(*_NESTED)
 
 
 def flat_sync_view(nested: DataFrame) -> DataFrame:
@@ -220,46 +260,15 @@ def flat_sync_view(nested: DataFrame) -> DataFrame:
     row carrying the sync-level prefix, with the outgoing array rolled up to
     (batch_count, total_sent, total_failed) via higher-order aggregate (F13,
     :250-289). sync_id synthesized when absent (F17, :597-600); sync_day is
-    the yyyyMMdd key of ``when`` (F5, :546)."""
-    e = F.col("e")
-    agg_sent = F.aggregate(
-        F.coalesce(e["outgoing"], F.array()),
-        F.lit(0).cast("bigint"),
-        lambda acc, o: acc + F.coalesce(o["sent"], F.lit(0)),
-    )
-    agg_failed = F.aggregate(
-        F.coalesce(e["outgoing"], F.array()),
-        F.lit(0).cast("bigint"),
-        lambda acc, o: acc + F.coalesce(o["failed"], F.lit(0)),
-    )
-    prefix = [c for c in nested.columns if c not in ("engines",)]
+    the yyyyMMdd key of ``when`` (F5, :546). The sync keys are computed
+    before the explode, so every engine row of one sync shares its
+    sync_id; an engine-less sync survives as one row with null engine
+    columns (``explode_outer``)."""
     return (
-        nested.withColumn("sync_id", F.uuid())
-        .withColumn(
-            "sync_day", F.date_format(F.timestamp_millis(F.col("when")), "yyyyMMdd")
-        )
-        .select(
-            *prefix,
-            "sync_id",
-            "sync_day",
-            F.explode_outer("engines").alias("e"),
-        )
-        .select(
-            *prefix,
-            "sync_id",
-            "sync_day",
-            e["name"].alias("engine_name"),
-            F.coalesce(e["took"], F.lit(0)).alias("engine_took"),
-            e["status"].alias("engine_status"),
-            e["failure_reason"].alias("engine_failure_reason"),
-            F.coalesce(e["incoming"]["applied"], F.lit(0)).alias("engine_incoming_applied"),
-            F.coalesce(e["incoming"]["failed"], F.lit(0)).alias("engine_incoming_failed"),
-            F.coalesce(e["incoming"]["new_failed"], F.lit(0)).alias("engine_incoming_new_failed"),
-            F.coalesce(e["incoming"]["reconciled"], F.lit(0)).alias("engine_incoming_reconciled"),
-            F.coalesce(F.size(e["outgoing"]), F.lit(0)).alias("engine_outgoing_batch_count"),
-            F.coalesce(agg_sent, F.lit(0)).alias("engine_outgoing_batch_total_sent"),
-            F.coalesce(agg_failed, F.lit(0)).alias("engine_outgoing_batch_total_failed"),
-        )
+        nested.selectExpr("*", *_SYNC_KEYS)
+        .selectExpr("*", "explode_outer(engines) AS e")
+        .selectExpr("*", *_FLAT_ENGINE)
+        .drop("engines", "e")
     )
 
 
@@ -270,53 +279,42 @@ def events_view(pings: DataFrame, extra_cols: list[str] | None = None) -> DataFr
     first four elements don't parse are silently skipped (the reference's
     malformed-entry tolerance, EventsTest.scala:14-22). Map values are
     stringified with JSON-null → the literal string 'null' (F19, Bug
-    1339130 semantics, Events.scala:42-58)."""
-    v = F.col("v")
-    ev = F.col("ev")
-    exploded = pings.select(
-        *(extra_cols or []),
-        _vget(v, "$.payload.uid", "string").alias("uid"),
-        _vget(v, "$.payload.deviceID", "string").alias("device_id"),
-        F.explode(_vget(v, "$.payload.events", "array<variant>")).alias("ev"),
+    1339130 semantics, Events.scala:42-58). ``extra_cols`` are passed
+    through ahead of the event columns."""
+    extra = list(extra_cols or [])
+    return (
+        pings.selectExpr(*extra, *_EVENTS_EXPLODE)
+        .selectExpr(*extra, *_EVENT)
+        .where(_EVENT_ACCEPTED)
     )
-    mv = _vget(ev, "$[5]", "map<string,variant>")
-    out = exploded.select(
-        *(extra_cols or []),
-        "uid",
-        "device_id",
-        _vget(ev, "$[0]", "bigint").alias("event_timestamp"),
-        _vget(ev, "$[1]", "string").alias("event_category"),
-        _vget(ev, "$[2]", "string").alias("event_method"),
-        _vget(ev, "$[3]", "string").alias("event_object"),
-        _vget(ev, "$[4]", "string").alias("event_string_value"),
-        F.transform_values(
-            mv,
-            lambda _k, x: F.coalesce(_vget(x, "$", "string"), F.lit("null")),
-        ).alias("event_map_values"),
-    )
-    required = ["event_timestamp", "event_category", "event_method", "event_object"]
-    cond = F.lit(True)
-    for c in required:
-        cond = cond & F.col(c).isNotNull()
-    return out.where(cond)
 
 
 def enrich_events_with_devices(events: DataFrame, nested: DataFrame) -> DataFrame:
     """J2 per-ping device-map lookup (SyncEventView.scala:216-265): attach
     (device_version, device_os) for the event's ``deviceID`` map value by
     joining the exploded device list — a proper distributed equi-join
-    instead of the reference's in-closure Map lookup."""
+    instead of the reference's in-closure Map lookup.
+
+    A uid may report one device id with different (version, os) across its
+    syncs; the entry from the sync with the latest ``when`` wins (ties on
+    ``when`` go to the greater version, then os), so the lookup is
+    deterministic."""
     devices = (
-        nested.select("uid", F.explode("devices").alias("d"))
-        .select(
-            "uid",
-            F.col("d.id").alias("device_id_key"),
-            F.col("d.version").alias("device_version"),
-            F.col("d.os").alias("device_os"),
+        nested.selectExpr("uid AS device_uid", "`when`", "explode(devices) AS d")
+        .selectExpr(
+            "device_uid",
+            "d.id AS device_id_key",
+            "named_struct('when', `when`, 'version', d.version, 'os', d.os) AS entry",
         )
-        .dropDuplicates(["uid", "device_id_key"])
+        .groupBy("device_uid", "device_id_key")
+        .agg(F.max("entry").alias("entry"))
+        .selectExpr(
+            "device_uid",
+            "device_id_key",
+            "entry.version AS device_version",
+            "entry.os AS device_os",
+        )
     )
-    devices = devices.withColumnRenamed("uid", "device_uid")
     ev_dev = events.withColumn(
         "event_device_id", F.element_at(F.col("event_map_values"), "deviceID")
     )
@@ -359,21 +357,23 @@ def nested_sync_view_observed(raw: DataFrame, json_col: str = "json"):
             (F.col("uid").isNull() | F.col("when").isNull()).cast("long")
         ).alias("syncs_rejected"),
     )
-    accepted = observed.where(F.col("uid").isNotNull() & F.col("when").isNotNull())
+    accepted = observed.where(_ACCEPTED)
     return accepted, {"parse": obs_parse, "syncs": obs_syncs}
 
 
 def ingest_metrics(raw: DataFrame, parsed: DataFrame, accepted: DataFrame) -> dict[str, int]:
     """A10 accumulator-style processed/ignored/failed counts
-    (SyncView.scala:49-51,115-117), as three cheap aggregates:
-    failed = unparseable JSON; ignored = parsed but rejected by required
-    fields; processed = accepted rows."""
+    (SyncView.scala:49-51,115-117), as four cheap aggregates:
+    failed = unparseable pings; ignored = exploded syncs rejected by the
+    required fields (``nested_sync_view_observed``'s ``syncs_rejected``);
+    processed = accepted sync rows."""
     total = raw.count()
-    parse_ok = parsed.where(F.col("v").isNotNull()).count()
+    parse_ok = parsed.where("v IS NOT NULL").count()
+    exploded = parsed.selectExpr(f"explode({_SYNCS}) AS s").count()
     accepted_n = accepted.count()
     return {
         "records_total": total,
         "records_failed": total - parse_ok,
-        "records_ignored": parse_ok - min(accepted_n, parse_ok),
+        "records_ignored": exploded - accepted_n,
         "rows_processed": accepted_n,
     }

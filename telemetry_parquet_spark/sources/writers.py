@@ -36,25 +36,20 @@ def write_partitioned(
     files_per_partition: int | None = 1,
     mode: str = "overwrite",
 ) -> None:
-    """Atomic per-partition overwrite (S7). With ``mode='overwrite'`` and
-    dynamic overwrite enabled (session default), only the partitions present
-    in ``df`` are replaced — the reference's "replace exactly one day"."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        out = df
-        if files_per_partition:
-            out = df.repartition(files_per_partition, *partition_cols)
-        out.write.mode(mode).partitionBy(*list(partition_cols)).parquet(path)
-    finally:
-        # session confs leak across callers; an unrelated later static
-        # overwrite must not silently become a dynamic one
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    """Atomic per-partition overwrite (S7). With ``mode='overwrite'`` only
+    the partitions present in ``df`` are replaced — the reference's "replace
+    exactly one day". Dynamic overwrite is set on this write, never in the
+    session conf, so concurrent writers (the streaming sink writes from its
+    micro-batch thread) cannot change each other's overwrite mode."""
+    out = df
+    if files_per_partition:
+        out = df.repartition(files_per_partition, *partition_cols)
+    (
+        out.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*list(partition_cols))
+        .parquet(path)
+    )
 
 
 def overwrite_single_day(

@@ -5,6 +5,7 @@ SyncViewTest.scala pattern), authored fresh for this engine."""
 from __future__ import annotations
 
 import json
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -158,6 +159,7 @@ def test_metrics(spark, parsed):
     m = ingest_metrics(raw, pings, nested)
     assert m["records_total"] == 5
     assert m["records_failed"] == 1  # NOT_JSON
+    assert m["records_ignored"] == 1  # NO_UID's sync, counted in syncs
     assert m["rows_processed"] == 4
 
 
@@ -225,6 +227,114 @@ def test_enrich_events_with_devices(spark, parsed):
     assert by_ts[1704240000001].device_version == "135.0"
     assert by_ts[1704240000001].device_os == "WINNT"
     assert by_ts[1704240000002].device_version is None
+
+
+# one device id reported with three (version, os) pairs across the uid's
+# syncs; the array order is not the `when` order, and the oldest sync has
+# the greatest version
+DEVICE_UPGRADE = ping(
+    {
+        "uid": "uid-4",
+        "deviceID": "dev-5",
+        "syncs": [
+            {"when": 1704240000000, "took": 1,
+             "devices": [{"id": "dev-5", "version": "135.0", "os": "Linux"}]},
+            {"when": 1704326400000, "took": 1,
+             "devices": [{"id": "dev-5", "version": "136.0", "os": "Linux"}]},
+            {"when": 1704153600000, "took": 1,
+             "devices": [{"id": "dev-5", "version": "137.0", "os": "Darwin"}]},
+        ],
+        "events": [
+            [1704326400001, "sync", "displayURI", "sendcommand", None, {"deviceID": "dev-5"}],
+        ],
+    }
+)
+
+
+def test_enrich_events_takes_latest_sync_device_entry(spark):
+    pings = parse_pings(spark.createDataFrame([(DEVICE_UPGRADE,)], ["json"]))
+    enriched = enrich_events_with_devices(events_view(pings), nested_sync_view(pings))
+    [r] = enriched.collect()
+    assert (r.device_version, r.device_os) == ("136.0", "Linux")
+
+
+VIEW_SCHEMAS = {
+    "nested": (
+        "struct<app_build_id:string,app_display_version:string,app_name:string,"
+        "app_version:string,app_channel:string,os:string,os_version:string,"
+        "os_locale:string,uid:string,device_id:string,when:bigint,took:bigint,"
+        "failure_reason:struct<name:string,value:string>,"
+        "status:struct<sync:string,service:string>,why:string,"
+        "engines:array<struct<name:string,took:bigint,status:string,"
+        "failure_reason:struct<name:string,value:string>,"
+        "incoming:struct<applied:bigint,failed:bigint,new_failed:bigint,reconciled:bigint>,"
+        "outgoing:array<struct<sent:bigint,failed:bigint>>,"
+        "steps:array<struct<name:string,took:bigint,counts:array<struct<name:string,count:bigint>>>>,"
+        "validation:struct<version:bigint,checked:bigint,took:bigint,"
+        "problems:array<struct<name:string,count:bigint>>,"
+        "failure_reason:struct<name:string,value:string>>>>,"
+        "devices:array<struct<id:string,version:string,os:string>>>"
+    ),
+    "flat": (
+        "struct<app_build_id:string,app_display_version:string,app_name:string,"
+        "app_version:string,app_channel:string,os:string,os_version:string,"
+        "os_locale:string,uid:string,device_id:string,when:bigint,took:bigint,"
+        "failure_reason:struct<name:string,value:string>,"
+        "status:struct<sync:string,service:string>,why:string,"
+        "devices:array<struct<id:string,version:string,os:string>>,"
+        "sync_id:string,sync_day:string,engine_name:string,engine_took:bigint,"
+        "engine_status:string,engine_failure_reason:struct<name:string,value:string>,"
+        "engine_incoming_applied:bigint,engine_incoming_failed:bigint,"
+        "engine_incoming_new_failed:bigint,engine_incoming_reconciled:bigint,"
+        "engine_outgoing_batch_count:int,engine_outgoing_batch_total_sent:bigint,"
+        "engine_outgoing_batch_total_failed:bigint>"
+    ),
+    "events": (
+        "struct<uid:string,device_id:string,event_timestamp:bigint,"
+        "event_category:string,event_method:string,event_object:string,"
+        "event_string_value:string,event_map_values:map<string,string>>"
+    ),
+}
+
+VIEW_BUILDERS = {
+    "nested": nested_sync_view,
+    "flat": lambda pings: flat_sync_view(nested_sync_view(pings)),
+    "events": events_view,
+}
+
+
+@pytest.mark.parametrize("view", sorted(VIEW_SCHEMAS))
+def test_view_schema_pinned(spark, parsed, view):
+    _, pings = parsed
+    assert VIEW_BUILDERS[view](pings).schema.simpleString() == VIEW_SCHEMAS[view]
+
+
+# py4j commands one build of each view may send to the JVM. The views are
+# SQL-expression projections (a few dozen commands); built as Column trees
+# they took 1,361 (nested), about 2,100-2,500 (flat over nested) and 365
+# (events).
+ROUND_TRIP_BUDGET = {"nested": 60, "flat": 150, "events": 40}
+
+
+@pytest.mark.parametrize("view", sorted(ROUND_TRIP_BUDGET))
+def test_view_build_round_trip_budget(spark, parsed, monkeypatch, view):
+    _, pings = parsed
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = [0]
+
+    def counting(*args, **kwargs):
+        # py4j's finalizer thread sends garbage-collection commands too;
+        # only this thread's commands belong to the build
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    VIEW_BUILDERS[view](pings)
+    monkeypatch.undo()
+    assert 0 < sent[0] <= ROUND_TRIP_BUDGET[view]
 
 
 def test_json_union_coercion_matrix(spark, sf_dir):

@@ -48,6 +48,35 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     assert os.path.isdir(os.path.join(path, "submission_date_s3=20240101"))
 
 
+def test_dynamic_overwrite_under_static_session_conf(spark, tmp_path):
+    """Dynamic overwrite is a per-write option: with the session set to
+    STATIC, rewriting one day still replaces only that day, and the
+    session conf is never touched (no save/restore to race with)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    path = str(tmp_path / "static_session")
+    spark.conf.set(key, "STATIC")
+    try:
+        write_partitioned(
+            spark.createDataFrame(
+                [(1, "20240101"), (2, "20240102")], ["id", "submission_date_s3"]
+            ),
+            path,
+        )
+        write_partitioned(
+            spark.createDataFrame([(99, "20240102")], ["id", "submission_date_s3"]),
+            path,
+        )
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    rows = {(r.id, r.submission_date_s3) for r in read_dataset(spark, path).collect()}
+    assert rows == {(1, "20240101"), (99, "20240102")}
+
+
 def test_run_daily(spark, tmp_path):
     path = str(tmp_path / "daily")
 
